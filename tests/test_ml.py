@@ -382,6 +382,20 @@ def test_harmony_soft_reduces_batch_separation(spark):
     assert after < before * 0.25, (before, after)
 
 
+@pytest.mark.parametrize("k", [1, 2])
+def test_harmony_soft_rejects_ragged_rows(spark, k):
+    """harmony_soft probes the dimensionality from the first row; a shorter
+    row must fail loudly, not come back with a NULL `corrected`."""
+    from utils_spark.operators.ml import harmony_soft
+
+    rows = [(f"a{i}", "A", [float(i), 1.0, 2.0]) for i in range(6)]
+    rows += [(f"b{i}", "B", [float(i), 3.0, 4.0]) for i in range(5)]
+    rows.append(("short", "B", [1.0, 2.0]))
+    df = spark.createDataFrame(rows, ["id", "batch", "vec"]).coalesce(1)
+    with pytest.raises(Exception, match="vec row is not 3-dim, size 2"):
+        harmony_soft(df, "id", "vec", "batch", k=k, n_iter=1, sigma=1.0).collect()
+
+
 def test_harmony_diversity_penalty_mixes_confounded_batches(spark):
     """Reference M8 theta (R/integrate.R:115-118): when batch is CONFOUNDED
     with cluster structure (each soft cluster ~one batch), the penalty-free

@@ -165,7 +165,7 @@ def test_collect_sites_match_adjudicated_whitelist():
     WHITELIST = {
         "operators/ml.py": 5,  # kxd centroids x2, approx_points bins, distinct-batch list, knn hot-bucket census (≤ _MAX_HOT_BUCKETS rows by limit())
         "operators/textmodel.py": 2,  # <=8-row merge tables
-        "queries/text.py": 2,  # <=8-row merge tables
+        "queries/text.py": 1,  # <=8-row merge table (_bpe_merges, shared by two queries)
         "queries/composite.py": 1,  # data-derived k
         "queries/coverage.py": 1,  # bounded COO
     }
@@ -376,6 +376,35 @@ def test_driver_sim_argv_validation_fails_fast():
         )
         assert out.returncode == 2, (argv, out.returncode, out.stderr)
         assert needle in out.stderr and "usage:" in out.stderr, (argv, out.stderr)
+
+
+def test_plan_and_timing_tools_argv_fail_fast():
+    """explain_dump, stage_times and time_registry share the fail-fast
+    contract: a flag without a usable value exits 2 with a "<flag> needs"
+    message before a JVM starts, never an IndexError/ValueError traceback."""
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    for tool, argv, needle in [
+        ("explain_dump.py", ["--dir"], "--dir needs"),
+        ("explain_dump.py", ["--sf"], "--sf needs"),
+        ("explain_dump.py", ["--suffix"], "--suffix needs"),
+        ("stage_times.py", ["--sf"], "--sf needs"),
+        ("time_registry.py", ["--sf"], "--sf needs"),
+        ("time_registry.py", ["--reps"], "--reps needs"),
+        ("time_registry.py", ["--reps", "abc"], "--reps needs"),
+        ("time_registry.py", ["--out"], "--out needs"),
+    ]:
+        out = subprocess.run(
+            [sys.executable, str(repo / "tools" / tool), *argv],
+            capture_output=True,
+            text=True,
+            cwd=repo,
+        )
+        assert out.returncode == 2, (tool, argv, out.returncode, out.stderr)
+        assert needle in out.stderr and "Traceback" not in out.stderr, (tool, argv, out.stderr)
 
 
 def test_shuffle_probe_helpers_and_argv():

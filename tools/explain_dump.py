@@ -17,23 +17,16 @@ import sys
 REPO = __file__.rsplit("/tools/", 1)[0]
 sys.path.insert(0, REPO)
 
+from _argv import pop_flag  # noqa: E402
+
 
 def main() -> int:
     args = list(sys.argv[1:])
     sf_dir = "/root/testdata/sf0.1"
     out_dir = "plans/r15"
-    suffix = ""
-    for flag, setter in (("--sf", "sf_dir"), ("--dir", "out_dir"), ("--suffix", "suffix")):
-        if flag in args:
-            i = args.index(flag)
-            val = args[i + 1]
-            del args[i : i + 2]
-            if setter == "sf_dir":
-                sf_dir = val
-            elif setter == "out_dir":
-                out_dir = val
-            else:
-                suffix = val
+    sf_dir = pop_flag(args, "--sf", sf_dir, "a data directory")
+    out_dir = pop_flag(args, "--dir", out_dir, "an output directory")
+    suffix = pop_flag(args, "--suffix", "", "a file-name suffix")
     bad = [a for a in args if a.startswith("-")]
     if bad or not args:
         print(f"unknown flags or no queries: {bad}", file=sys.stderr)

@@ -23,6 +23,8 @@ import urllib.request
 REPO = __file__.rsplit("/tools/", 1)[0]
 sys.path.insert(0, REPO)
 
+from _argv import pop_flag  # noqa: E402
+
 
 def stages(ui_url: str, app_id: str, status: str = "complete") -> list[dict]:
     with urllib.request.urlopen(f"{ui_url}/api/v1/applications/{app_id}/stages?status={status}") as r:
@@ -42,10 +44,7 @@ def main() -> int:
     cold = "--cold" in args
     if cold:
         args.remove("--cold")
-    if "--sf" in args:
-        i = args.index("--sf")
-        sf_dir = args[i + 1]
-        del args[i : i + 2]
+    sf_dir = pop_flag(args, "--sf", sf_dir, "a data directory")
     if not args or any(a.startswith("-") for a in args):
         print(__doc__, file=sys.stderr)
         return 2

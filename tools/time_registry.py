@@ -24,24 +24,15 @@ import time
 REPO = __file__.rsplit("/tools/", 1)[0]
 sys.path.insert(0, REPO)
 
+from _argv import pop_flag  # noqa: E402
+
 
 def main() -> int:
     args = list(sys.argv[1:])
     sf_dir = "/root/testdata/sf0.1"
-    reps = 2
-    out = None
-    if "--sf" in args:
-        i = args.index("--sf")
-        sf_dir = args[i + 1]
-        del args[i : i + 2]
-    if "--reps" in args:
-        i = args.index("--reps")
-        reps = int(args[i + 1])
-        del args[i : i + 2]
-    if "--out" in args:
-        i = args.index("--out")
-        out = args[i + 1]
-        del args[i : i + 2]
+    sf_dir = pop_flag(args, "--sf", sf_dir, "a data directory")
+    reps = pop_flag(args, "--reps", 2, "an integer", int)
+    out = pop_flag(args, "--out", None, "an output path")
     bad = [a for a in args if a.startswith("-")]
     if bad:
         print(f"unknown flags: {bad}", file=sys.stderr)

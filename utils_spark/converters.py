@@ -1,6 +1,8 @@
-"""One-time format converters: HDF5-Loom and RDS → Parquet (reference
-scan surface S5/S6: R/reference.R:38 ``readRDS`` Seurat blobs, R/reference.R:78
-``LoomExperiment::import`` of .loom single-cell matrices).
+"""One-time format converter: HDF5-Loom → Parquet (reference scan surface
+S5: R/reference.R:78 ``LoomExperiment::import`` of .loom single-cell
+matrices). The reference's ``readRDS`` blobs (S6, R/reference.R:38) have no
+converter here: export them from R upstream, to parquet
+(``arrow::write_parquet``) or to .loom.
 
 Policy (SURVEY §2.1): formats with no Spark reader are converted ONCE,
 upstream of the engine, never at query time. This module is that converter.
@@ -15,10 +17,10 @@ lands, regardless of which tool produced it:
 - ``<out>/cells.parquet``     — (cell_id BIGINT, <one column per col_attr>)
 - ``<out>/genes.parquet``     — (gene_id BIGINT, <one column per row_attr>)
 
-The HDF5 reader (h5py) and RDS reader (rdata) are optional; when absent,
-the converters raise ``ConverterUnavailable`` with the exact offline
-command to run instead. Conversion is CHUNKED (column blocks of the HDF5
-matrix → parquet row groups) so a 100 GB .loom never materializes densely.
+The HDF5 reader (h5py) is optional; when absent, the converter raises
+``ConverterUnavailable`` with the exact offline command to run instead.
+Conversion is CHUNKED (column blocks of the HDF5 matrix → parquet row
+groups) so a 100 GB .loom never materializes densely.
 """
 
 from __future__ import annotations
@@ -117,36 +119,6 @@ def loom_to_parquet(loom_path: str, out_dir: str, chunk_cols: int = 2048) -> dic
         pq.write_table(attrs_table(f["/row_attrs"], "gene_id", n_genes),
                        os.path.join(out_dir, "genes.parquet"))
     return {"cells": n_cells, "genes": n_genes, "nnz": nnz}
-
-
-def rds_to_parquet(rds_path: str, out_dir: str) -> dict:
-    """Convert an .rds data.frame (the reference's readRDS blobs,
-    R/reference.R:38) to a single parquet table via the pure-python
-    ``rdata`` reader. Matrix-bearing Seurat objects are out of scope —
-    export those to .loom in R first (SURVEY §2.1 policy)."""
-    try:
-        import rdata  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise ConverterUnavailable(
-            "rdata is not installed. Either convert offline on a host with it, "
-            "or export from R directly:\n"
-            '  Rscript -e \'arrow::write_parquet(readRDS("'
-            f"{rds_path}\"), \"{out_dir}/table.parquet\")'"
-        ) from e
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    parsed = rdata.parser.parse_file(rds_path)
-    obj = rdata.conversion.convert(parsed)
-    df = next(iter(obj.values())) if isinstance(obj, dict) else obj
-    if not isinstance(df, pd.DataFrame):
-        raise ValueError(f"{rds_path} did not deserialize to a data.frame")
-    os.makedirs(out_dir, exist_ok=True)
-    pq.write_table(pa.Table.from_pandas(df, preserve_index=False),
-                   os.path.join(out_dir, "table.parquet"))
-    return {"rows": len(df), "columns": list(df.columns)}
 
 
 def load_matrix_tables(spark: SparkSession, converted_dir: str) -> dict[str, DataFrame]:

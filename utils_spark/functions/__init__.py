@@ -72,12 +72,6 @@ def squish(value: Column, lo: Column, hi: Column) -> Column:
     return F.least(F.greatest(value, lo), hi)
 
 
-def log2_cpm(count: Column, size_factor: Column) -> Column:
-    """log-normalization kernel: log2(count / size_factor + 1)
-    (reference R/reference.R:161 via scater::logNormCounts)."""
-    return F.log2(count / size_factor + F.lit(1.0))
-
-
 def fixed_width_bucket(value: Column | str, width: float, n_buckets: int) -> Column:
     """Fixed-width histogram bucket index in [0, n_buckets-1].
 

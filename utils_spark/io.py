@@ -65,27 +65,35 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reading unrelated nanos parquet in the same session should convert as
     done here (timestamp_micros(ts div 1000)).
     """
+    pin_read_confs(spark)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return normalize_events_ts(df) if name == "events" else df
+
+
+def pin_read_confs(spark: SparkSession) -> None:
+    """Set the two session confs every events scan (batch or stream) reads
+    under: nanosAsLong, so TIMESTAMP(NANOS) parquet reads as long nanos,
+    and a UTC session time zone (see ``load_table``)."""
     if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # the timestamp_ntz -> timestamp cast below is wall-clock-preserving only
-    # under UTC; pin it for caller-supplied vanilla sessions too (same
-    # defensive-config pattern as nanosAsLong above)
+    # the timestamp_ntz -> timestamp cast in normalize_events_ts is
+    # wall-clock-preserving only under UTC; pin it for caller-supplied
+    # vanilla sessions too (same defensive-config pattern as nanosAsLong)
     # NOTE: no sentinel default to conf.get here — Spark 4 VALIDATES the
     # caller-supplied default when the conf is unset, so get(key, "") throws
     # INVALID_CONF_VALUE on exactly the vanilla sessions this guard exists for
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            from pyspark.sql import functions as F
 
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            from pyspark.sql import functions as F
 
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize a scan of the STORED events schema to a plain TimestampType
+    `ts` (the two branches ``load_table`` documents)."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

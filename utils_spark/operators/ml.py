@@ -1586,8 +1586,8 @@ def harmony_soft(
     (k×batches) aggregate tables per refinement.
 
     PRECONDITION: fixed dimensionality (probed once from the first row);
-    ragged inputs were never supported (KMeans' array_to_vector rejects
-    them).
+    a row of another length, or a NULL row, fails the first pass with a
+    `harmony_soft: ... is not <dim>-dim` error.
 
     Returns df + `corrected` array column."""
     from pyspark.ml.clustering import KMeans
@@ -1607,6 +1607,20 @@ def harmony_soft(
         # returning the empty frame with the corrected column appended
         return df.withColumn("corrected", to_double_array(array_col))
     dim = int(probe["s"]) if probe is not None else 0
+    # ragged (or NULL) rows would silently read NULL past their end
+    # (NULL-skipped moment sums, NULL `corrected`): fail the first pass over
+    # `work` instead — an inline check, no extra job
+    work = work.withColumn(
+        "__v",
+        F.when(F.size("__v") == dim, F.col("__v")).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"harmony_soft: {array_col} row is not {dim}-dim, size "),
+                    F.coalesce(F.size("__v").cast("string"), F.lit("NULL")),
+                )
+            )
+        ),
+    )
     # the dim-wide expression lists are built ONCE, as SQL strings parsed
     # server-side: constructing them from Column operator overloads costs a
     # py4j round trip PER OPERATOR (measured 10.6 s of pure driver-Python

@@ -293,8 +293,12 @@ def loess_trend(
     10⁶ features — so the arrays are packed into ONE sorted row, broadcast
     to `defaultParallelism` chunk tasks that each fit their index slice
     (identical per-point arithmetic), and the two robustness re-weightings
-    run as single-row stages between the fan-outs. Three fan-out passes
-    total, one consumer action — no checkpoints, no driver collects.
+    run as single-row stages between the fan-outs. Three fan-out passes,
+    no checkpoints and no driver collects: nothing runs until the caller's
+    action. The rounds are not lineage-cut, so the final plan reaches each
+    earlier round's state both directly and through its trend row; unless
+    Spark reuses the broadcast exchanges, that one action can recompute
+    earlier rounds' chunk fits (time only — the output is the same).
     Points are sorted by (mean, variance, feature) — a deterministic total
     order; the previous np.argsort(x) left ties implementation-ordered, so
     neighborhoods at exactly-tied means can select a different (equally

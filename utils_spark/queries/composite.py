@@ -7,11 +7,12 @@ their math is unit-tested against exact references in tests/.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from utils_spark.functions import to_double_array
 from utils_spark.io import load_table
+from utils_spark.queries._shared import cust_supp_edges, embedding8, planted_vectors
 from utils_spark.registry import register
 
 
@@ -609,18 +610,7 @@ def louvain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from utils_spark.operators.ml import knn_graph, louvain_communities as louvain
     from utils_spark.operators.ml import snn_graph
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    q = (F.col("vec_id") / 5).cast("long")  # micro-cluster id (vec_id // 5)
-    m = F.pmod(F.col("vec_id"), F.lit(5)).cast("double")  # member offset 0..4
-    planted = e.select(
-        "vec_id",
-        F.array(
-            (F.pmod(q, F.lit(50)) * 10000.0 + m).cast("double"),
-            ((q / 50).cast("long") * 10000.0).cast("double"),
-            F.lit(0.0),
-            F.lit(0.0),
-        ).alias("vec"),
-    )
+    planted = planted_vectors(spark, sf_dir)
     from utils_spark.plans import cut_lineage, scaled_shuffle_partitions
 
     # the KNN/SNN build shuffles the bounded vector set several times —
@@ -796,6 +786,39 @@ def spline_exact_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rank2_vectors(ids: DataFrame) -> DataFrame:
+    """(vec_id, vec): v = a·u1 + b·u2 with small integer a, b from vec_id
+    and two fixed independent 6-dim directions — an exactly rank-2 set."""
+    u1 = [1.0, 2.0, 0.0, 1.0, 0.0, 3.0]
+    u2 = [0.0, 1.0, 1.0, 0.0, 2.0, 1.0]
+    a = (F.pmod(F.col("vec_id"), F.lit(7)) + 1).cast("double")
+    b = (F.pmod(F.col("vec_id"), F.lit(11)) + 1).cast("double")
+    return ids.select(
+        "vec_id",
+        F.array(*[a * F.lit(x1) + b * F.lit(x2) for x1, x2 in zip(u1, u2)]).alias("vec"),
+    )
+
+
+def _euclid(x: Column, y: Column) -> Column:
+    """Euclidean distance between two equal-length double arrays."""
+    return F.sqrt(
+        F.aggregate(
+            F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
+            F.lit(0.0),
+            lambda acc, z: acc + z,
+        )
+    )
+
+
+def _duplicate_batches(base: DataFrame) -> DataFrame:
+    """(vec_id, vec, batch): `base` as batch "a" plus an exact copy as
+    batch "b" with vec_id + 1000."""
+    dup = base.select((F.col("vec_id") + 1000).alias("vec_id"), "vec")
+    return base.withColumn("batch", F.lit("a")).unionByName(
+        dup.withColumn("batch", F.lit("b"))
+    )
+
+
 @register(
     "pca_exact_recovery",
     # exact-recovery certificate for the M1 PCA stack: inputs are planted
@@ -821,15 +844,7 @@ def pca_exact_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     `pca_embedding`."""
     from utils_spark.operators.ml import pca_embed
 
-    u1 = [1.0, 2.0, 0.0, 1.0, 0.0, 3.0]
-    u2 = [0.0, 1.0, 1.0, 0.0, 2.0, 1.0]
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    a = (F.pmod(F.col("vec_id"), F.lit(7)) + 1).cast("double")
-    b = (F.pmod(F.col("vec_id"), F.lit(11)) + 1).cast("double")
-    planted = e.select(
-        "vec_id",
-        F.array(*[a * F.lit(x1) + b * F.lit(x2) for x1, x2 in zip(u1, u2)]).alias("vec"),
-    )
+    planted = _rank2_vectors(load_table(spark, sf_dir, "embeddings").select("vec_id"))
     embedded, ratios = pca_embed(planted, "vec", n_components=2, out_col="pca")
     nxt = embedded.select(
         (F.col("vec_id") - 1).alias("vec_id"),
@@ -837,17 +852,8 @@ def pca_exact_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pca").alias("pca_n"),
     )
 
-    def _dist(x, y):
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
-                F.lit(0.0),
-                lambda acc, z: acc + z,
-            )
-        )
-
     pairs = embedded.join(nxt, "vec_id").select(
-        (_dist(F.col("pca"), F.col("pca_n")) - _dist(F.col("vec"), F.col("vec_n"))).alias("err")
+        (_euclid(F.col("pca"), F.col("pca_n")) - _euclid(F.col("vec"), F.col("vec_n"))).alias("err")
     )
     return (
         embedded.agg(F.count("*").alias("n_vecs"))
@@ -885,18 +891,7 @@ def harmony_null_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior stays property-tested behind `batch_correction`."""
     from utils_spark.operators.ml import harmony_soft
 
-    base = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 200)
-        .select(
-            "vec_id",
-            F.transform(F.slice("embedding", 1, 8), lambda x: x.cast("double")).alias("vec"),
-        )
-    )
-    dup = base.select((F.col("vec_id") + 1000).alias("vec_id"), "vec")
-    both = base.withColumn("batch", F.lit("a")).unionByName(
-        dup.withColumn("batch", F.lit("b"))
-    )
+    both = _duplicate_batches(embedding8(spark, sf_dir, 200))
     corrected = harmony_soft(both, "vec_id", "vec", "batch", k=4, n_iter=2, sigma=1.0, theta=1.0)
     err = F.aggregate(
         F.zip_with("corrected", "vec", lambda c, v: F.abs(c - v)),
@@ -974,18 +969,8 @@ def cca_anchor_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     correction stays property-tested in tests/test_ml.py."""
     from utils_spark.operators.ml import cca_integrate_lite, mnn_anchors
 
-    base = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 200)
-        .select(
-            "vec_id",
-            F.transform(F.slice("embedding", 1, 8), lambda x: x.cast("double")).alias("vec"),
-        )
-    )
-    dup = base.select((F.col("vec_id") + 1000).alias("vec_id"), "vec")
-    both = base.withColumn("batch", F.lit("a")).unionByName(
-        dup.withColumn("batch", F.lit("b"))
-    )
+    base = embedding8(spark, sf_dir, 200)
+    both = _duplicate_batches(base)
     joint, _ratios = cca_integrate_lite(both, "vec_id", "vec", "batch", n_components=4)
     zs = joint.select("vec_id", "batch", to_double_array("integrated").alias("__v"))
     ref = zs.filter(F.col("batch") == "a").select(F.col("vec_id").alias("__key"), "__v")
@@ -1111,14 +1096,7 @@ def harmony_shift_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from utils_spark.operators.ml import harmony_soft
 
     shift = [10.0, -5.0, 3.0, 0.0, 2.0, -8.0, 1.0, 4.0]
-    base = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 300)
-        .select(
-            "vec_id",
-            F.transform(F.slice("embedding", 1, 8), lambda x: x.cast("double")).alias("vec"),
-        )
-    )
+    base = embedding8(spark, sf_dir, 300)
     shifted = base.select(
         (F.col("vec_id") + 1000).alias("vec_id"),
         F.zip_with(
@@ -1209,14 +1187,8 @@ def mds_exact_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end with a constant SQL oracle."""
     from utils_spark.operators.ml import classical_mds_2d
 
-    u1 = [1.0, 2.0, 0.0, 1.0, 0.0, 3.0]
-    u2 = [0.0, 1.0, 1.0, 0.0, 2.0, 1.0]
-    e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300).select("vec_id")
-    a = (F.pmod(F.col("vec_id"), F.lit(7)) + 1).cast("double")
-    b = (F.pmod(F.col("vec_id"), F.lit(11)) + 1).cast("double")
-    planted = e.select(
-        "vec_id",
-        F.array(*[a * F.lit(x1) + b * F.lit(x2) for x1, x2 in zip(u1, u2)]).alias("vec"),
+    planted = _rank2_vectors(
+        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300).select("vec_id")
     )
     mds = classical_mds_2d(planted, "vec_id", "vec", sample_n=1000)
     embedded = planted.join(
@@ -1229,21 +1201,12 @@ def mds_exact_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("mds2").alias("m2n"),
     )
 
-    def _dist6(x, y):
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
-                F.lit(0.0),
-                lambda acc, z: acc + z,
-            )
-        )
-
     d2 = F.sqrt(
         (F.col("mds1") - F.col("m1n")) * (F.col("mds1") - F.col("m1n"))
         + (F.col("mds2") - F.col("m2n")) * (F.col("mds2") - F.col("m2n"))
     )
     pairs = embedded.join(nxt, "vec_id").select(
-        (d2 - _dist6(F.col("vec"), F.col("vec_n"))).alias("err")
+        (d2 - _euclid(F.col("vec"), F.col("vec_n"))).alias("err")
     )
     return embedded.agg(F.count("*").alias("n_points")).crossJoin(
         F.broadcast(pairs.agg(F.round(F.max(F.abs("err")), 6).alias("max_dist_err")))
@@ -1410,15 +1373,10 @@ def pagerank_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut per round, parallelism sized from the measured edge count."""
     from utils_spark.operators.ml import pagerank
 
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pair = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
+    pair = cust_supp_edges(
+        spark, sf_dir,
+        (F.col("o_custkey") * 2).alias("src"),
+        (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
     edges = pair.unionByName(pair.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     nodes = edges.select(F.col("src").alias("n"))
@@ -1472,18 +1430,7 @@ def triangle_count_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from utils_spark.operators.ml import knn_graph, snn_graph, triangle_enumerate
     from utils_spark.plans import cut_lineage, scaled_shuffle_partitions
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    q = (F.col("vec_id") / 5).cast("long")
-    m = F.pmod(F.col("vec_id"), F.lit(5)).cast("double")
-    planted = e.select(
-        "vec_id",
-        F.array(
-            (F.pmod(q, F.lit(50)) * 10000.0 + m).cast("double"),
-            ((q / 50).cast("long") * 10000.0).cast("double"),
-            F.lit(0.0),
-            F.lit(0.0),
-        ).alias("vec"),
-    )
+    planted = planted_vectors(spark, sf_dir)
     n_vec = planted.count()
     with scaled_shuffle_partitions(spark, n_vec, 5_000):
         edges = knn_graph(planted, "vec_id", "vec", k=4, bucket_length=250.0)
@@ -1598,18 +1545,7 @@ def leiden_refined_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from utils_spark.plans import cut_lineage, scaled_shuffle_partitions
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    q = (F.col("vec_id") / 5).cast("long")
-    m = F.pmod(F.col("vec_id"), F.lit(5)).cast("double")
-    planted = e.select(
-        "vec_id",
-        F.array(
-            (F.pmod(q, F.lit(50)) * 10000.0 + m).cast("double"),
-            ((q / 50).cast("long") * 10000.0).cast("double"),
-            F.lit(0.0),
-            F.lit(0.0),
-        ).alias("vec"),
-    )
+    planted = planted_vectors(spark, sf_dir)
     n_vec = planted.count()
     with scaled_shuffle_partitions(spark, n_vec, 5_000):
         edges = knn_graph(planted, "vec_id", "vec", k=4, bucket_length=250.0)
@@ -1692,16 +1628,14 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp rounding makes the rank key engine-stable)."""
     from utils_spark.plans import cut_lineage
 
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # materialize the distinct edge list ONCE: it is read three times below
     # (degrees, anchor edges, wedge probe), and the o x li build join would
     # otherwise be re-planned per consumer (same discipline as pagerank /
     # lpa / kcore edge builds)
     e = cut_lineage(
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
+        cust_supp_edges(
+            spark, sf_dir, F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
+        )
     )
     degs = e.groupBy("supp").agg(F.count("*").alias("d")).filter(F.col("d") >= 2)
     anchors = (
@@ -1809,15 +1743,10 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     random-order asynchronous LPA cannot be oracled."""
     from utils_spark.operators.ml import label_propagation
 
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pair = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
+    pair = cust_supp_edges(
+        spark, sf_dir,
+        (F.col("o_custkey") * 2).alias("u"),
+        (F.col("l_suppkey") * 2 + 1).alias("v"),
     )
     nodes = (
         pair.select(F.col("u").alias("n"))
@@ -1920,15 +1849,10 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic and engine-replayable."""
     from utils_spark.plans import cut_lineage
 
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pair = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
+    pair = cust_supp_edges(
+        spark, sf_dir,
+        (F.col("o_custkey") * 2).alias("u"),
+        (F.col("l_suppkey") * 2 + 1).alias("v"),
     )
     e = cut_lineage(
         pair.unionByName(pair.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
@@ -2033,12 +1957,8 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 cutoffs are cross-engine deterministic."""
     from utils_spark.operators.ml import hits
 
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pair = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
-        .distinct()
+    pair = cust_supp_edges(
+        spark, sf_dir, F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst")
     )
     hubs, auths = hits(pair, n_iter=3)
     top_a = (
@@ -2128,15 +2048,10 @@ def harmonic_closeness_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles), a distinct, and anti-joins against prior frontiers so
     settled nodes are never re-expanded. Frontier size is bounded by
     5 x nodes; the seed list is a TakeOrdered-5, not a global sort."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edge = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("a"),
-            F.concat(F.lit("s"), F.col("l_suppkey")).alias("b"),
-        )
-        .distinct()
+    edge = cust_supp_edges(
+        spark, sf_dir,
+        F.concat(F.lit("c"), F.col("o_custkey")).alias("a"),
+        F.concat(F.lit("s"), F.col("l_suppkey")).alias("b"),
     )
     sym = edge.union(edge.select(F.col("b").alias("a"), F.col("a").alias("b")))
     seeds = (

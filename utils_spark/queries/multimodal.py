@@ -23,12 +23,21 @@ from utils_spark.io import load_table
 from utils_spark.registry import register
 
 
-def _planted_media(spark: SparkSession, sf_dir: str, content_mod: int | None = None) -> DataFrame:
-    """(media_id, content) with deterministic PPM/PGM/BMP/WAV/garbage blobs
-    derived from documents.doc_id (generator is certificate scaffolding, not
-    a hot-path operator — the operator under test is the decoder). With
-    ``content_mod``, content depends only on doc_id % content_mod, planting
-    exact-duplicate classes for the dedup certificate."""
+def _wav(ch: int, data_size: int, data: bytes = b"") -> bytes:
+    """PCM16 8 kHz WAV blob: RIFF header, fmt chunk, then the data chunk
+    (header declaring ``data_size`` bytes, followed by ``data``)."""
+    return (
+        b"RIFF" + struct.pack("<I", 36 + data_size) + b"WAVE"
+        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, ch, 8000, 16000 * ch, 2 * ch, 16)
+        + b"data" + struct.pack("<I", data_size) + data
+    )
+
+
+def _planted_blobs(spark: SparkSession, sf_dir: str, blob) -> DataFrame:
+    """(media_id, content) with content = ``blob(doc_id)`` for every
+    document, generated Arrow-batched through ``mapInPandas`` (certificate
+    scaffolding, not a hot-path operator — the operators under test decode
+    these blobs)."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -38,40 +47,42 @@ def _planted_media(spark: SparkSession, sf_dir: str, content_mod: int | None = N
 
     def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                mid = int(doc_id)
-                d = mid % content_mod if content_mod else mid
-                branch = d % 4
-                if branch == 0:  # PPM (P6): ASCII header
-                    w, h = d % 31 + 1, d % 17 + 1
-                    blob = f"P6 {w} {h} 255\n".encode()
-                elif branch == 1:  # PGM (P5)
-                    w, h = d % 23 + 2, d % 13 + 1
-                    blob = f"P5 {w} {h} 255\n".encode()
-                elif branch == 2:  # BMP: file header + BITMAPINFOHEADER
-                    w, h = d % 63 + 1, d % 29 + 1
-                    blob = struct.pack("<2sIHHI", b"BM", 54, 0, 0, 54) + struct.pack(
-                        "<IiiHH", 40, w, h, 1, 24
-                    )
-                elif d % 5 == 0:  # planted corrupt blob -> err row
-                    blob = b"GARBAGE!" + bytes([d % 251])
-                else:  # WAV: RIFF + fmt chunk + empty data chunk
-                    ch = d % 2 + 1
-                    dur_ms = (d % 50 + 1) * 10
-                    data_size = 16 * ch * dur_ms  # = byte_rate * dur / 1000
-                    blob = (
-                        b"RIFF" + struct.pack("<I", 36 + data_size) + b"WAVE"
-                        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, ch, 8000, 16000 * ch, 2 * ch, 16)
-                        + b"data" + struct.pack("<I", data_size)
-                    )
-                rows.append({"media_id": mid, "content": blob})
+            rows = [{"media_id": int(d), "content": blob(int(d))} for d in pdf["doc_id"]]
             yield pd.DataFrame(rows, columns=["media_id", "content"])
 
     schema = StructType(
         [StructField("media_id", LongType()), StructField("content", BinaryType())]
     )
     return ids.mapInPandas(gen, schema)
+
+
+def _planted_media(spark: SparkSession, sf_dir: str, content_mod: int | None = None) -> DataFrame:
+    """(media_id, content) with deterministic PPM/PGM/BMP/WAV/garbage blobs
+    derived from documents.doc_id. With ``content_mod``, content depends
+    only on doc_id % content_mod, planting exact-duplicate classes for the
+    dedup certificate."""
+
+    def blob(mid: int) -> bytes:
+        d = mid % content_mod if content_mod else mid
+        branch = d % 4
+        if branch == 0:  # PPM (P6): ASCII header
+            w, h = d % 31 + 1, d % 17 + 1
+            return f"P6 {w} {h} 255\n".encode()
+        if branch == 1:  # PGM (P5)
+            w, h = d % 23 + 2, d % 13 + 1
+            return f"P5 {w} {h} 255\n".encode()
+        if branch == 2:  # BMP: file header + BITMAPINFOHEADER
+            w, h = d % 63 + 1, d % 29 + 1
+            return struct.pack("<2sIHHI", b"BM", 54, 0, 0, 54) + struct.pack(
+                "<IiiHH", 40, w, h, 1, 24
+            )
+        if d % 5 == 0:  # planted corrupt blob -> err row
+            return b"GARBAGE!" + bytes([d % 251])
+        # WAV with an empty data chunk: byte_rate * dur / 1000 data bytes declared
+        ch = d % 2 + 1
+        return _wav(ch, 16 * ch * (d % 50 + 1) * 10)
+
+    return _planted_blobs(spark, sf_dir, blob)
 
 
 @register(
@@ -221,40 +232,18 @@ def _planted_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a mono/stereo 8 kHz clip of (doc_id % 50 + 1)*10 ms whose
     interleaved samples are s(frame n, channel c) =
     ((n*7 + c*3 + doc_id) % 256 - 128) * 64 — pure integer arithmetic an
-    SQL oracle reproduces exactly (certificate scaffolding; the operator
-    under test is the PCM decoder + windower)."""
-    from collections.abc import Iterator
-
+    SQL oracle reproduces exactly."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-    ids = load_table(spark, sf_dir, "documents").select(F.col("doc_id").cast("long"))
+    def blob(d: int) -> bytes:
+        ch = d % 2 + 1
+        frames = 8 * (d % 50 + 1) * 10  # 8 kHz
+        n = np.arange(frames).reshape(-1, 1)
+        c = np.arange(ch).reshape(1, -1)
+        data = (((n * 7 + c * 3 + d) % 256 - 128) * 64).astype("<i2").reshape(-1).tobytes()
+        return _wav(ch, len(data), data)
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ch = d % 2 + 1
-                dur_ms = (d % 50 + 1) * 10
-                frames = 8 * dur_ms  # 8 kHz
-                n = np.arange(frames).reshape(-1, 1)
-                c = np.arange(ch).reshape(1, -1)
-                vals = (((n * 7 + c * 3 + d) % 256 - 128) * 64).astype("<i2")
-                data = vals.reshape(-1).tobytes()
-                blob = (
-                    b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                    + b"fmt " + struct.pack("<IHHIIHH", 16, 1, ch, 8000, 16000 * ch, 2 * ch, 16)
-                    + b"data" + struct.pack("<I", len(data)) + data
-                )
-                rows.append({"media_id": d, "content": blob})
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("content", BinaryType())]
-    )
-    return ids.mapInPandas(gen, schema)
+    return _planted_blobs(spark, sf_dir, blob)
 
 
 @register(
@@ -312,32 +301,17 @@ def _planted_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a (doc_id % 31 + 1) × (doc_id % 17 + 1) RGB image whose pixel
     at column x, row y, channel c is (3x + 5y + 7c + doc_id) % 256 — pure
     integer arithmetic an SQL oracle regenerates exactly."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-    ids = load_table(spark, sf_dir, "documents").select(F.col("doc_id").cast("long"))
+    def blob(d: int) -> bytes:
+        w, h = d % 31 + 1, d % 17 + 1
+        x = np.arange(w).reshape(1, -1, 1)
+        y = np.arange(h).reshape(-1, 1, 1)
+        c = np.arange(3).reshape(1, 1, -1)
+        img = ((3 * x + 5 * y + 7 * c + d) % 256).astype(np.uint8)
+        return f"P6 {w} {h} 255\n".encode() + img.tobytes()
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 31 + 1, d % 17 + 1
-                x = np.arange(w).reshape(1, -1, 1)
-                y = np.arange(h).reshape(-1, 1, 1)
-                c = np.arange(3).reshape(1, 1, -1)
-                img = ((3 * x + 5 * y + 7 * c + d) % 256).astype(np.uint8)
-                blob = f"P6 {w} {h} 255\n".encode() + img.tobytes()
-                rows.append({"media_id": d, "content": blob})
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("content", BinaryType())]
-    )
-    return ids.mapInPandas(gen, schema)
+    return _planted_blobs(spark, sf_dir, blob)
 
 
 @register(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from utils_spark.io import load_table
+from utils_spark.queries._shared import daily_by_type, type_pairs, with_margins
 from utils_spark.registry import register
 
 MAD_CONSISTENCY = 1.4826  # consistency constant for normal data, as in R stats::mad
@@ -466,9 +467,7 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation. Ranks are half-integers (exact in double), so the only
     float rounding is the final 6dp rho."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("double").alias("x"), F.avg("value").alias("y"))
+    daily = daily_by_type(e, F.count("*").cast("double").alias("x"), F.avg("value").alias("y"))
     wx = Window.partitionBy("event_type").orderBy("x")
     wy = Window.partitionBy("event_type").orderBy("y")
     ranked = daily.select(
@@ -546,14 +545,7 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = e.groupBy("event_type", F.dayofweek("ts").alias("dow")).agg(
         F.count("*").cast("long").alias("o")
     )
-    tot = obs.select(
-        "event_type",
-        "dow",
-        "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("row_tot"),
-        F.sum("o").over(Window.partitionBy("dow")).alias("col_tot"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
+    tot = with_margins(obs)
     expected = F.col("row_tot").cast("double") * F.col("col_tot") / F.col("n")
     cells = tot.select(
         "event_type",
@@ -854,9 +846,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     and three bounded aggregations joined on the series key. S and the
     tie counts are exact integers; var_s/z round at 4/6dp."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("double").alias("x"))
+    daily = daily_by_type(e, F.count("*").cast("double").alias("x"))
     a, b = daily.alias("a"), daily.alias("b")
     s = (
         a.join(
@@ -949,9 +939,7 @@ def jackknife_cv_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     closing aggregation — O(series × days) total, no pair join. All
     inputs to the 6dp-rounded outputs are few-term double sums."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("x"))
+    daily = daily_by_type(e, F.avg("value").alias("x"))
     suff = daily.groupBy("event_type").agg(
         F.count("*").cast("double").alias("n"),
         F.sum("x").alias("s1"),
@@ -1058,9 +1046,7 @@ def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from utils_spark.functions import md5_long
 
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("x"))
+    daily = daily_by_type(e, F.avg("value").alias("x"))
     reps = spark.range(0, 100).select(F.col("id").alias("b"))
     u = (
         md5_long(
@@ -1102,6 +1088,20 @@ def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max(F.when(F.col("rn") == lo_rn, F.col("m"))), 6).alias("ci_lo"),
             F.round(F.max(F.when(F.col("rn") == hi_rn, F.col("m"))), 6).alias("ci_hi"),
         )
+    )
+
+
+def _hours_to_purchase(events: DataFrame) -> DataFrame:
+    """(user_id, h): whole hours from each user's first event to their
+    first purchase; NULL for users who never purchase."""
+    return events.groupBy("user_id").agg(
+        F.floor(
+            (
+                F.unix_timestamp(F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))))
+                - F.unix_timestamp(F.min("ts"))
+            )
+            / 3600.0
+        ).cast("long").alias("h")
     )
 
 
@@ -1181,16 +1181,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both engines (unix_timestamp and date_diff('second') both
     truncate sub-second parts identically); the survival product is exp(Σ ln(1 - d/n)) in BOTH
     engines, so product associativity can't drift."""
-    e = load_table(spark, sf_dir, "events")
-    users = e.groupBy("user_id").agg(
-        F.floor(
-            (
-                F.unix_timestamp(F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))))
-                - F.unix_timestamp(F.min("ts"))
-            )
-            / 3600.0
-        ).cast("long").alias("h")
-    )
+    users = _hours_to_purchase(load_table(spark, sf_dir, "events"))
     dur = users.select(
         "user_id",
         F.when(F.col("h") <= 48, F.col("h")).otherwise(F.lit(48)).alias("t"),
@@ -1279,12 +1270,7 @@ def mutual_information_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = e.groupBy("event_type", F.dayofweek("ts").alias("dow")).agg(
         F.count("*").cast("double").alias("o")
     )
-    tot = obs.select(
-        "event_type", "dow", "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("row_tot"),
-        F.sum("o").over(Window.partitionBy("dow")).alias("col_tot"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
+    tot = with_margins(obs)
     exp_ = F.col("row_tot") * F.col("col_tot") / F.col("n")
     parts = tot.groupBy("n").agg(
         F.sum((F.col("o") / F.col("n")) * F.log(F.col("o") * F.col("n") / (F.col("row_tot") * F.col("col_tot")))).alias("mi"),
@@ -1473,9 +1459,7 @@ def permutation_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from utils_spark.functions import md5_long
 
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type").isin("click", "view"))
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("x"))
+    daily = daily_by_type(e, F.avg("value").alias("x"))
     obs = daily.agg(
         (
             F.avg(F.when(F.col("event_type") == "click", F.col("x")))
@@ -1581,14 +1565,13 @@ def welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "n", "m",
         ((F.col("ss") - F.col("n") * F.col("m") * F.col("m")) / (F.col("n") - 1)).alias("v"),
     )
-    a, b = st.alias("a"), st.alias("b")
     va_na = F.col("a.v") / F.col("a.n")
     vb_nb = F.col("b.v") / F.col("b.n")
     se2 = va_na + vb_nb
     dof = F.pow(se2, 2) / (
         F.pow(va_na, 2) / (F.col("a.n") - 1) + F.pow(vb_nb, 2) / (F.col("b.n") - 1)
     )
-    return a.join(F.broadcast(b), F.col("a.event_type") < F.col("b.event_type")).select(
+    return type_pairs(st).select(
         F.col("a.event_type").alias("type_a"),
         F.col("b.event_type").alias("type_b"),
         F.col("a.n").cast("long").alias("n_a"),
@@ -1862,9 +1845,7 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= n_days/2 rows. Rank sums are exact multiples of 0.5, so the
     unordered SUM is float-exact across engines."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
+    daily = daily_by_type(e, F.avg("value").alias("v"))
     idx = daily.select(
         "event_type",
         "v",
@@ -1977,9 +1958,7 @@ def friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, never a corpus-side shuffle. Rank sums are exact
     multiples of 0.5, so cross-engine sums are float-exact."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
+    daily = daily_by_type(e, F.avg("value").alias("v"))
     kdf = daily.agg(F.countDistinct("event_type").alias("k"))
     complete = (
         daily.groupBy("day")
@@ -2109,16 +2088,7 @@ def logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-duration table (<= 49 rows) via two reverse-cumulative
     windows, and the final statistic is one scalar aggregate with the
     cohort sizes attached from a broadcast 1-row aggregate."""
-    e = load_table(spark, sf_dir, "events")
-    users = e.groupBy("user_id").agg(
-        F.floor(
-            (
-                F.unix_timestamp(F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))))
-                - F.unix_timestamp(F.min("ts"))
-            )
-            / 3600.0
-        ).cast("long").alias("h")
-    )
+    users = _hours_to_purchase(load_table(spark, sf_dir, "events"))
     dur = users.select(
         (F.col("user_id") % 2).cast("int").alias("grp"),
         F.when(F.col("h") <= 48, F.col("h")).otherwise(F.lit(48)).alias("t"),
@@ -2308,14 +2278,7 @@ def g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = e.groupBy(
         "event_type", F.dayofweek("ts").alias("dow")
     ).agg(F.count("*").alias("o"))
-    tot = obs.select(
-        "event_type",
-        "dow",
-        "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("row_tot"),
-        F.sum("o").over(Window.partitionBy("dow")).alias("col_tot"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
+    tot = with_margins(obs)
     expected = F.col("row_tot").cast("double") * F.col("col_tot") / F.col("n")
     cells = tot.select(
         "event_type",

@@ -11,6 +11,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from utils_spark.io import load_table
+from utils_spark.queries._shared import (
+    daily_by_type,
+    daily_counts,
+    daily_lag_groups,
+    daily_value_series,
+    event_day,
+    value_series_pairs,
+)
 from utils_spark.registry import register
 
 
@@ -173,7 +181,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard event-analytics retention query. First-day table is small
     per cohort and broadcast back onto activity."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
+        "user_id", event_day().alias("day")
     )
     firsts = e.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
     activity = (
@@ -449,7 +457,7 @@ def event_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     item counts and the basket total broadcast."""
     e = load_table(spark, sf_dir, "events")
     baskets = e.select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day"), "event_type"
+        "user_id", event_day().alias("day"), "event_type"
     ).distinct()
     nb = baskets.agg(
         F.countDistinct("user_id", "day").cast("double").alias("nb")
@@ -542,9 +550,7 @@ def daily_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from utils_spark.operators.stats import ewma_closed_form
 
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("double").alias("n"))
+    daily = daily_counts(e)
     sm = ewma_closed_form(daily, ["event_type"], "day", "n", alpha=0.25)
     return sm.select(
         "event_type",
@@ -668,8 +674,7 @@ def ewma_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     daily = (
-        e.groupBy("event_type", F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(F.count("*").cast("double").alias("n_raw"))
+        daily_by_type(e, F.count("*").cast("double").alias("n_raw"))
         .select(
             "event_type",
             "day",
@@ -756,7 +761,7 @@ def rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day")).agg(
+    daily = e.groupBy(event_day().alias("day")).agg(
         F.sum((F.col("event_type") == "view").cast("int")).cast("double").alias("x"),
         F.sum((F.col("event_type") == "click").cast("int")).cast("double").alias("y"),
     )
@@ -834,9 +839,7 @@ def seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("double").alias("n"))
+    daily = daily_counts(e)
     w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     trended = daily.select(
         "event_type",
@@ -907,9 +910,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-group self-join on the series key, never cross-series, and
     never over raw events. Exact in-group median via percentile."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("double").alias("n"))
+    daily = daily_counts(e)
     idx = daily.select(
         "event_type",
         "n",
@@ -994,33 +995,10 @@ def autocorrelation_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(series-length x 7) after the rollup, never a per-lag re-sort.
     The band flag compares the unrounded ratio; the emitted acf is
     6dp-rounded for cross-engine hashing."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("double").alias("n"))
-    stats = daily.groupBy("event_type").agg(
-        F.avg("n").alias("mu"),
-        F.count("*").alias("cnt"),
-        (F.sum(F.col("n") * F.col("n")) - F.count("*") * F.avg("n") * F.avg("n")).alias("ss"),
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    lagged = daily.select(
-        "event_type", "n", *[F.lag("n", k).over(w).alias(f"l{k}") for k in range(1, 8)]
-    )
-    stacked = lagged.select(
-        "event_type",
-        "n",
-        F.expr(
-            "stack(7, " + ", ".join(f"{k}, l{k}" for k in range(1, 8)) + ") AS (lag, lv)"
-        ),
-    ).filter(F.col("lv").isNotNull())
     num = F.sum((F.col("n") - F.col("mu")) * (F.col("lv") - F.col("mu")))
-    acf = (
-        stacked.join(F.broadcast(stats), "event_type")
-        .groupBy("event_type", "lag")
-        .agg(num.alias("num"), F.first("ss").alias("ss"), F.first("cnt").alias("cnt"))
+    acf = daily_lag_groups(e).agg(
+        num.alias("num"), F.first("ss").alias("ss"), F.first("cnt").alias("cnt")
     )
     ratio = F.col("num") / F.col("ss")
     return acf.select(
@@ -1106,14 +1084,12 @@ def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    day = F.to_date(F.date_trunc("day", "ts"))
     spike = F.when(
         F.dayofmonth("day") >= 20,
         F.when(F.col("event_type") == "view", F.lit(0.5)).otherwise(F.lit(2.0)),
     ).otherwise(F.lit(1.0))
     daily = (
-        e.groupBy("event_type", day.alias("day"))
-        .agg(F.count("*").cast("double").alias("raw_n"))
+        daily_by_type(e, F.count("*").cast("double").alias("raw_n"))
         .select("event_type", "day", (F.col("raw_n") * spike).alias("n"))
     )
     ref = (
@@ -1258,9 +1234,7 @@ def pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("double").alias("n"))
+    daily = daily_counts(e)
     stats = daily.groupBy("event_type").agg(
         F.avg("n").alias("mu"),
         (F.sum(F.col("n") * F.col("n")) - F.count("*") * F.avg("n") * F.avg("n")).alias("ss"),
@@ -1371,35 +1345,10 @@ def ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are computed with the exact same expressions as
     `autocorrelation_lags`, so cross-engine float parity is inherited
     rather than re-derived."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.count("*").cast("double").alias("n"))
-    stats = daily.groupBy("event_type").agg(
-        F.avg("n").alias("mu"),
-        F.count("*").alias("cnt"),
-        (F.sum(F.col("n") * F.col("n")) - F.count("*") * F.avg("n") * F.avg("n")).alias("ss"),
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    lagged = daily.select(
-        "event_type", "n", *[F.lag("n", k).over(w).alias(f"l{k}") for k in range(1, 8)]
-    )
-    stacked = lagged.select(
-        "event_type",
-        "n",
-        F.expr(
-            "stack(7, " + ", ".join(f"{k}, l{k}" for k in range(1, 8)) + ") AS (lag, lv)"
-        ),
-    ).filter(F.col("lv").isNotNull())
-    acf = (
-        stacked.join(F.broadcast(stats), "event_type")
-        .groupBy("event_type", "lag")
-        .agg(
-            (F.sum((F.col("n") - F.col("mu")) * (F.col("lv") - F.col("mu"))) / F.first("ss")).alias("rho"),
-            F.first("cnt").alias("cnt"),
-        )
+    acf = daily_lag_groups(e).agg(
+        (F.sum((F.col("n") - F.col("mu")) * (F.col("lv") - F.col("mu"))) / F.first("ss")).alias("rho"),
+        F.first("cnt").alias("cnt"),
     )
     terms = acf.select(
         "event_type", "cnt",
@@ -1476,14 +1425,8 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical fold via list_reduce, seed packed as element 0, so
     the float op order matches exactly."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).filter(F.size("vals") >= 3)  # degenerate-series guard (see docstring)
+    # degenerate-series guard (see docstring)
+    series = daily_value_series(e).filter(F.size("vals") >= 3)
     folded = series.select(
         "event_type",
         F.size("vals").alias("n"),
@@ -1594,14 +1537,7 @@ def holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs the byte-identical fold via list_reduce with the state packed
     as a flat 10-double list, so the float op order matches exactly."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).withColumn("n", F.size("vals"))
+    series = daily_value_series(e)
 
     def week_mean(start: int):
         return (
@@ -1730,19 +1666,8 @@ def periodogram_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = (
-        daily.groupBy("event_type")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-            ).alias("vals")
-        )
-        .withColumn("n", F.size("vals"))
-        .filter(F.col("n") >= 3)  # degenerate-series guard (see docstring)
-    )
+    # degenerate-series guard (see docstring)
+    series = daily_value_series(e).filter(F.col("n") >= 3)
     cent = series.select(
         "event_type",
         "n",
@@ -1891,26 +1816,7 @@ def dtw_pairwise_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the oracle does, so fold order and tie resolution are
     byte-identical across engines."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).withColumn("n", F.size("vals"))
-    a, b = series.alias("a"), series.alias("b")
-    # broadcast the (tiny, one-row-per-type) build side so the
-    # inequality pair join plans as a bounded BroadcastNestedLoopJoin,
-    # never a CartesianProduct — same contract as pairwise_ks
-    pairs = a.join(F.broadcast(b), F.col("a.event_type") < F.col("b.event_type")).select(
-        F.col("a.event_type").alias("type_a"),
-        F.col("b.event_type").alias("type_b"),
-        F.col("a.vals").alias("av"),
-        F.col("b.vals").alias("bv"),
-        F.col("a.n").alias("n"),
-        F.col("b.n").alias("m"),
-    )
+    pairs = value_series_pairs(e)
     INF = F.lit(1e300)
 
     def _inner(prev, i):
@@ -2031,14 +1937,7 @@ def isotonic_daily_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive and interval means are identical left folds, so
     cross-engine parity is float-exact before the 6dp round."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).withColumn("n", F.size("vals"))
+    series = daily_value_series(e)
 
     def interval_mean(i, j):
         return F.aggregate(
@@ -2166,24 +2065,7 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus volume never re-enters). S and the tie counts are integer
     sums, so cross-engine parity is exact by construction."""
     e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(F.avg("value").alias("v"))
-    series = daily.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "v"))), lambda s: s["v"]
-        ).alias("vals")
-    ).withColumn("n", F.size("vals"))
-    a, b = series.alias("a"), series.alias("b")
-    # broadcast build side: bounded BroadcastNestedLoopJoin, not a
-    # CartesianProduct (registry-wide plan audit contract)
-    pairs = a.join(F.broadcast(b), F.col("a.event_type") < F.col("b.event_type")).select(
-        F.col("a.event_type").alias("type_a"),
-        F.col("b.event_type").alias("type_b"),
-        F.col("a.vals").alias("av"),
-        F.col("b.vals").alias("bv"),
-        F.col("a.n").alias("n"),
-    )
+    pairs = value_series_pairs(e)
 
     def pair_fold(term):
         return F.aggregate(

@@ -760,6 +760,35 @@ def minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", *[sig[i].alias(f"h{i}") for i in range(4)])
 
 
+_LSH_HASHES, _LSH_BANDS = 16, 4
+
+
+def _lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sig, band_id, band_hash): every document's MinHash signature
+    over its 5-char shingles (16 hashes), exploded to its 4 LSH bands."""
+    # local testdata is ONE parquet file with ONE row group, so the scan is
+    # a single partition no matter what spark.sql.files.maxPartitionBytes
+    # says (parquet splits at row-group granularity) — repartition is the
+    # only way to spread the CPU-bound shingling+hashing locally. Guard it
+    # on the actual scan parallelism so a real cluster read (many files)
+    # provably has no extra Exchange in this plan.
+    d = load_table(spark, sf_dir, "documents")
+    d = spread_low_parallelism(d)
+    # persist the signatures (r15, guide §5): the banded join evaluates
+    # both sides, and without the cache each side re-paid the full
+    # md5-per-shingle signature pass (measured 6.2 s + 9.2 s of
+    # executorRunTime across the two sides of minhash_lsh_pairs at sf0.1).
+    # One (doc_id, 16 longs) row per doc — tiny at any scale.
+    sig = scratch_persist(
+        d.select("doc_id", _minhash_sig_col(char_shingles("text", 5), _LSH_HASHES).alias("sig"))
+    )
+    return sig.select(
+        "doc_id",
+        "sig",
+        F.explode(minhash_band_structs("sig", _LSH_HASHES, _LSH_BANDS)).alias("band"),
+    ).select("doc_id", "sig", "band.band_id", "band.band_hash")
+
+
 _LSH_ORACLE = """
     WITH shingled AS (
       SELECT doc_id,
@@ -809,28 +838,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (band_id, band_hash) keys — no O(n²) pair enumeration. This is
     the canonical 100 TB near-dup design (MinHashLSH as in MLlib, but with
     deterministic md5 hashing and explicit banding)."""
-    n_hashes, n_bands = 16, 4
-    # local testdata is ONE parquet file with ONE row group, so the scan is
-    # a single partition no matter what spark.sql.files.maxPartitionBytes
-    # says (parquet splits at row-group granularity) — repartition is the
-    # only way to spread the CPU-bound shingling+hashing locally. Guard it
-    # on the actual scan parallelism so a real cluster read (many files)
-    # provably has no extra Exchange in this plan.
-    d = load_table(spark, sf_dir, "documents")
-    d = spread_low_parallelism(d)
-    # persist the signatures (r15, guide §5): the banded join evaluates
-    # both sides, and without the cache each side re-paid the full
-    # md5-per-shingle signature pass (measured 6.2 s + 9.2 s of
-    # executorRunTime across the two sides of minhash_lsh_pairs at sf0.1).
-    # One (doc_id, 16 longs) row per doc — tiny at any scale.
-    sig = scratch_persist(
-        d.select("doc_id", _minhash_sig_col(char_shingles("text", 5), n_hashes).alias("sig"))
-    )
-    bands = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(minhash_band_structs("sig", n_hashes, n_bands)).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.band_hash")
+    bands = _lsh_bands(spark, sf_dir)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -844,7 +852,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.doc_id").alias("doc_b"),
             (
                 F.size(F.filter(F.zip_with("a.sig", "b.sig", lambda x, y: x == y), lambda v: v)).cast("double")
-                / n_hashes
+                / _LSH_HASHES
             ).alias("est_jaccard"),
         )
         .distinct()
@@ -1184,22 +1192,7 @@ def fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the benchmark corpus is tiny by construction (a fixed
     eval-suite set), so the probe side streams map-only and no doc×doc
     pairing ever materializes."""
-    n_hashes, n_bands = 16, 4
-    d = load_table(spark, sf_dir, "documents")
-    d = spread_low_parallelism(d)
-    # persist the signatures (r15, guide §5): the banded join evaluates
-    # both sides, and without the cache each side re-paid the full
-    # md5-per-shingle signature pass (measured 6.2 s + 9.2 s of
-    # executorRunTime across the two sides of minhash_lsh_pairs at sf0.1).
-    # One (doc_id, 16 longs) row per doc — tiny at any scale.
-    sig = scratch_persist(
-        d.select("doc_id", _minhash_sig_col(char_shingles("text", 5), n_hashes).alias("sig"))
-    )
-    bands = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(minhash_band_structs("sig", n_hashes, n_bands)).alias("band"),
-    ).select("doc_id", "sig", "band.band_id", "band.band_hash")
+    bands = _lsh_bands(spark, sf_dir)
     train = bands.filter(F.col("doc_id") % 50 != 0)
     bench = bands.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("bench_id"),
@@ -1209,7 +1202,7 @@ def fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     est = (
         F.size(F.filter(F.zip_with("sig", "bsig", lambda x, y: x == y), lambda v: v)).cast("double")
-        / n_hashes
+        / _LSH_HASHES
     )
     cand = (
         train.join(bench, ["band_id", "band_hash"])
@@ -2642,6 +2635,36 @@ def _wordpiece_train_oracle(n_rounds: int) -> str:
     return _bpe_cte_parts(n_rounds, mode="wordpiece") + "\n    " + selects
 
 
+def _encoding_summary(words: DataFrame) -> DataFrame:
+    """Per-source tokenizer accounting over (doc_id, source, w, toks) rows:
+    docs, words, tokens, and an order-free checksum of each word's
+    encoding."""
+    enc = words.select(
+        "doc_id",
+        "source",
+        F.size("toks").alias("ntok"),
+        F.pmod(
+            md5_long(F.concat_ws("|", F.col("w"), F.concat_ws(" ", F.col("toks")))),
+            F.lit(1073741824),
+        ).alias("h"),
+    )
+    return enc.groupBy("source").agg(
+        F.countDistinct("doc_id").cast("long").alias("n_docs"),
+        F.count("*").cast("long").alias("n_words"),
+        F.sum("ntok").cast("long").alias("n_tokens"),
+        F.sum("h").cast("long").alias("checksum"),
+    )
+
+
+def _bpe_merges(d: DataFrame) -> list[tuple[str, str]]:
+    """The 8-round BPE merge table trained on `d.text`, in merge order."""
+    from utils_spark.operators.textmodel import bpe_train
+
+    merges_df = bpe_train(d, "text", n_merges=8)
+    # bounded driver-scalar state: <= n_merges rows, like the trainer's argmax
+    return [(r.left_tok, r.right_tok) for r in merges_df.orderBy("merge_round").collect()]
+
+
 @register(
     "bpe_training_rounds",
     # FULL iterative BPE tokenizer training (8 merge rounds): each round
@@ -2767,15 +2790,10 @@ def bpe_encoding_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         TOKENIZER_APPLY_TOPK,
         _word_symbol_table,
         bpe_encode_expr,
-        bpe_train,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    merges_df = bpe_train(d, "text", n_merges=8)
-    # bounded driver-scalar state: <= n_merges rows, like the trainer's argmax
-    merges = [
-        (r.left_tok, r.right_tok) for r in merges_df.orderBy("merge_round").collect()
-    ]
+    merges = _bpe_merges(d)
     head = (
         _word_symbol_table(d, "text")
         .orderBy(F.desc("n"), F.asc("w"))
@@ -2792,21 +2810,8 @@ def bpe_encoding_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         # occurrences that missed the head dictionary
         F.coalesce(F.col("toks"), bpe_encode_expr(F.col("w"), merges)).alias("toks"),
         "w",
-    ).select(
-        "doc_id",
-        "source",
-        F.size("toks").alias("ntok"),
-        F.pmod(
-            md5_long(F.concat_ws("|", F.col("w"), F.concat_ws(" ", F.col("toks")))),
-            F.lit(1073741824),
-        ).alias("h"),
     )
-    return enc.groupBy("source").agg(
-        F.countDistinct("doc_id").cast("long").alias("n_docs"),
-        F.count("*").cast("long").alias("n_words"),
-        F.sum("ntok").cast("long").alias("n_tokens"),
-        F.sum("h").cast("long").alias("checksum"),
-    )
+    return _encoding_summary(enc)
 
 
 def _unigram_cte_parts(apply_pass: bool = False) -> str:
@@ -3079,21 +3084,7 @@ def unigram_encoding_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w",
         F.filter(F.array(*piece_at), lambda x: x.isNotNull()).alias("toks"),
     )
-    enc = hits.unionByName(miss_enc).select(
-        "doc_id",
-        "source",
-        F.size("toks").alias("ntok"),
-        F.pmod(
-            md5_long(F.concat_ws("|", F.col("w"), F.concat_ws(" ", F.col("toks")))),
-            F.lit(1073741824),
-        ).alias("h"),
-    )
-    return enc.groupBy("source").agg(
-        F.countDistinct("doc_id").cast("long").alias("n_docs"),
-        F.count("*").cast("long").alias("n_words"),
-        F.sum("ntok").cast("long").alias("n_tokens"),
-        F.sum("h").cast("long").alias("checksum"),
-    )
+    return _encoding_summary(hits.unionByName(miss_enc))
 
 
 @register(
@@ -4745,14 +4736,10 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         TOKENIZER_APPLY_TOPK,
         _word_symbol_table,
         bpe_encode_expr,
-        bpe_train,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    merges_df = bpe_train(d, "text", n_merges=8)
-    merges = [
-        (r.left_tok, r.right_tok) for r in merges_df.orderBy("merge_round").collect()
-    ]
+    merges = _bpe_merges(d)
     head = (
         _word_symbol_table(d, "text")
         .orderBy(F.desc("n"), F.asc("w"))

@@ -9,7 +9,7 @@ hot path; float arrays are cast to double once for stable math.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from utils_spark.functions import cosine_similarity, to_double_array
@@ -169,6 +169,19 @@ _IVF_ORACLE = """
 """
 
 
+def _label_centroids(vecs: DataFrame) -> DataFrame:
+    """(label, centroid): the mean `v` array per label — posexplode, avg
+    per (label, dim), re-assemble the arrays in dim order."""
+    comp = vecs.select("label", F.posexplode("v").alias("dim", "x"))
+    return (
+        comp.groupBy("label", "dim")
+        .agg(F.avg("x").alias("cx"))
+        .groupBy("label")
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
+        .select("label", F.transform("pairs", lambda p: p["cx"]).alias("centroid"))
+    )
+
+
 @register(
     "ann_ivf_bucketed",
     # FULLY ORACLED: DuckDB rebuilds 64-dim centroids (generated SQL),
@@ -191,15 +204,8 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, neighbor_id, cosine, probed_label)."""
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", "label", to_double_array("embedding").alias("v"))
-    # (1) centroids: posexplode → avg per (label, dim) → re-assemble arrays
-    comp = vecs.select("label", F.posexplode("v").alias("dim", "x"))
-    cent = (
-        comp.groupBy("label", "dim")
-        .agg(F.avg("x").alias("cx"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
-        .select("label", F.transform("pairs", lambda p: p["cx"]).alias("centroid"))
-    )
+    # (1) exact centroids per label
+    cent = _label_centroids(vecs)
     # (2) route queries (vec_id < 10) to nearest centroid by cosine
     q = vecs.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     routed = (
@@ -537,6 +543,42 @@ def _sq_dist(a, b):
     )
 
 
+def _pq_qdtab() -> Column:
+    """A query's dense distance table `qdtab` (M·K slots, 0-based) from its
+    slot → distance map `qm`."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(_PQ_M * _PQ_K - 1)),
+        lambda idx: F.element_at(F.col("qm"), idx.cast("int")),
+    ).alias("qdtab")
+
+
+def _pq_adc_dist() -> Column:
+    """Asymmetric distance, 6dp: the sum over subspaces j of the query's
+    `qdtab` entry for the vector's code `codes[j]`."""
+    return F.round(
+        F.aggregate(
+            F.sequence(F.lit(1), F.lit(_PQ_M)),
+            F.lit(0.0),
+            lambda acc, j: acc
+            + F.element_at(
+                F.col("qdtab"),
+                ((j - 1) * _PQ_K + 1).cast("int") + F.element_at(F.col("codes"), j.cast("int")),
+            ),
+        ),
+        6,
+    )
+
+
+def _top5_by_adc(scored: DataFrame) -> DataFrame:
+    """Top 5 neighbors per query by (adc_dist, neighbor_id): a top 5 per
+    (query, hash bucket of the neighbor) first, then per query."""
+    order = (F.asc("adc_dist"), F.asc("neighbor_id"))
+    w1 = Window.partitionBy("query_id", F.pmod(F.hash("neighbor_id"), F.lit(32))).orderBy(*order)
+    bucket_topk = scored.withColumn("rn", F.row_number().over(w1)).filter(F.col("rn") <= 5).drop("rn")
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return bucket_topk.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).drop("rn")
+
+
 def _pq_subs(vecs: DataFrame, *extra_cols: str) -> DataFrame:
     """(key cols, v[64]) → one row per (vector, subspace): (key cols, j,
     sub[8]). ``extra_cols`` are carried through unchanged (e.g. the IVF
@@ -624,35 +666,17 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.map_from_entries(F.collect_list(F.struct("slot", "d"))).alias("qm"))
         .select(
             "query_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M * _PQ_K - 1)),
-                lambda idx: F.element_at(F.col("qm"), idx.cast("int")),
-            ).alias("qdtab"),
+            _pq_qdtab(),
         )
     )
-    adc = F.round(
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(_PQ_M)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.element_at(
-                F.col("qdtab"),
-                ((j - 1) * _PQ_K + 1).cast("int") + F.element_at(F.col("codes"), j.cast("int")),
-            ),
-        ),
-        6,
-    )
+    adc = _pq_adc_dist()
     scored = (
         F.broadcast(qrows)
         .crossJoin(codes)
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adc_dist"))
     )
-    order = (F.asc("adc_dist"), F.asc("neighbor_id"))
-    w1 = Window.partitionBy("query_id", F.pmod(F.hash("neighbor_id"), F.lit(32))).orderBy(*order)
-    bucket_topk = scored.withColumn("rn", F.row_number().over(w1)).filter(F.col("rn") <= 5).drop("rn")
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return bucket_topk.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).drop("rn")
+    return _top5_by_adc(scored)
 
 
 _IVFADC_NPROBE = 2  # coarse cells probed per query
@@ -856,24 +880,10 @@ def ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "probed_label",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M * _PQ_K - 1)),
-                lambda idx: F.element_at(F.col("qm"), idx.cast("int")),
-            ).alias("qdtab"),
+            _pq_qdtab(),
         )
     )
-    adc = F.round(
-        F.aggregate(
-            F.sequence(F.lit(1), F.lit(_PQ_M)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.element_at(
-                F.col("qdtab"),
-                ((j - 1) * _PQ_K + 1).cast("int") + F.element_at(F.col("codes"), j.cast("int")),
-            ),
-        ),
-        6,
-    )
+    adc = _pq_adc_dist()
     scored = (
         F.broadcast(qrows)
         .join(codes, F.col("label") == F.col("probed_label"))
@@ -885,11 +895,7 @@ def ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
             adc.alias("adc_dist"),
         )
     )
-    order = (F.asc("adc_dist"), F.asc("neighbor_id"))
-    w1 = Window.partitionBy("query_id", F.pmod(F.hash("neighbor_id"), F.lit(32))).orderBy(*order)
-    bucket_topk = scored.withColumn("rn", F.row_number().over(w1)).filter(F.col("rn") <= 5).drop("rn")
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return bucket_topk.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5).drop("rn")
+    return _top5_by_adc(scored)
 
 
 @register(
@@ -1199,14 +1205,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ranking so route and rank are engine-stable."""
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", "label", to_double_array("embedding").alias("v"))
-    comp = vecs.select("label", F.posexplode("v").alias("dim", "x"))
-    cent = (
-        comp.groupBy("label", "dim")
-        .agg(F.avg("x").alias("cx"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
-        .select("label", F.transform("pairs", lambda p: p["cx"]).alias("centroid"))
-    )
+    cent = _label_centroids(vecs)
     q = vecs.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )

@@ -47,8 +47,9 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), d
 def load_all() -> dict[str, QueryDef]:
     """Import every query module (side effect: registration) and return the registry.
 
-    Deliberately EAGER over all modules: measured 0.06 s for all 15 query
-    modules / 185 queries (vs 0.29 s for the pyspark import itself), and
+    Deliberately EAGER over all modules: measured 0.06 s for the 15 query
+    modules when they held 185 queries (vs 0.29 s for the pyspark import
+    itself; there are 273 now), and
     the driver contract's ``oracle_sql()`` needs every module's oracle
     strings regardless — a lazy per-module registry would save nothing
     while adding a name→module index to keep in sync (evaluated round 6).

@@ -10,69 +10,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-
-def _events_raw_schema(ts_type) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-
-
-# rounds 1-2 testdata: ts = TIMESTAMP(NANOS) read as long nanos
-# (see utils_spark.io.load_table for the batch twin of this conversion)
-EVENTS_RAW_SCHEMA = _events_raw_schema(LongType())
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream over the events table (stand-in for Kafka in this
-    environment). `events.ts` has shipped as TIMESTAMP(NANOS) and as
-    TIMESTAMP(MICROS, ntz) across testdata regenerations; we probe the
-    stored type with one batch footer read, then mirror ``load_table``'s
-    two normalization branches so stream and batch schemas are identical
-    (a unit test pins that equality)."""
-    # one-footer probe of the STORED parquet type (lazy scan — only the
-    # schema is materialized). The conf guards below duplicate load_table's
-    # defensive pattern on purpose: a caller-supplied vanilla session must
-    # read identically (nanosAsLong set BEFORE the probe, UTC keeping the
-    # ntz cast and window/hour extraction wall-clock-exact vs the oracles).
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # no sentinel default — Spark 4 validates unset-conf defaults (see io.py)
-    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    stored_ts = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
-    if stored_ts == "bigint":
-        schema = EVENTS_RAW_SCHEMA
-    else:
-        from pyspark.sql.types import TimestampNTZType, TimestampType
+    environment). The stream reads the STORED parquet schema, taken from
+    one batch footer probe, and goes through ``load_table``'s conf guards
+    and `ts` normalization, so stream and batch schemas are identical (a
+    unit test pins that equality)."""
+    from utils_spark.io import normalize_events_ts, pin_read_confs
 
-        schema = _events_raw_schema(
-            TimestampNTZType() if stored_ts == "timestamp_ntz" else TimestampType()
-        )
+    # nanosAsLong must be set BEFORE the probe; UTC keeps the ntz cast and
+    # window/hour extraction wall-clock-exact vs the oracles
+    pin_read_confs(spark)
+    # one-footer probe of the STORED schema (lazy scan — only the schema
+    # is materialized)
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     reader = spark.readStream.schema(schema).option("pathGlobFilter", "events.parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     # the file source needs a DIRECTORY; select just the events file by glob
-    df = reader.parquet(sf_dir)
-    if stored_ts == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif stored_ts == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_events_ts(reader.parquet(sf_dir))
 
 
 def read_documents_stream(
